@@ -73,7 +73,7 @@ def _chunk_mentions(tokens):
     return ents
 
 
-def _adjacency(deps, n_tokens):
+def _adjacency(deps):
     """(cells, neighbors): directional type cells with the reference's
     fill-order overwrite rule, and sorted undirected neighbor lists."""
     cells: dict[tuple[int, int], str] = {}
@@ -208,7 +208,7 @@ def sentence_candidates(url, sent_id, tokens, deps, entity_a, entity_b, stop,
     t2 = sorted(k for k in ents if entity_b in k)
     if not t1 or not t2:
         return []
-    cells, nbrs = _adjacency(deps, len(tokens))
+    cells, nbrs = _adjacency(deps)
     by_id = {t["id"]: t for t in tokens}
     by_id[0] = ROOT_TOKEN
     masks = {i: _mask(t) for i, t in by_id.items()}
@@ -334,29 +334,15 @@ def candidates_from_sentences(sentences: DataFrame, entity_a: str,
     """sentences rows -> candidate rows (mapInPandas; stop list and
     optional S5/F3 allowlists are tiny and ship inside the serialized
     closure — map-side anti/semi joins).  Entry point for pre-parsed
-    corpora (e.g. CoreNLP XML via kgre.corenlp)."""
-    stop = frozenset(stop_ids)
-    a1 = frozenset(allow1) if allow1 is not None else None
-    a2 = frozenset(allow2) if allow2 is not None else None
-
-    has_text = "sent_text" in sentences.columns
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            texts = pdf["sent_text"] if has_text else [None] * len(pdf)
-            for url, sid, toks, deps, st in zip(
-                pdf["url"], pdf["sent_id"], pdf["tokens"], pdf["deps"],
-                texts,
-            ):
-                rows.extend(
-                    sentence_candidates(url, int(sid), toks, deps, entity_a,
-                                        entity_b, stop, a1, a2,
-                                        sent_text=st)
-                )
-            yield rows_to_pdf(rows)
-
-    return sentences.mapInPandas(run, schema=CANDIDATES_SCHEMA)
+    corpora (e.g. CoreNLP XML via kgre.corenlp); ``sent_text`` is
+    optional and rebuilt from the token words when absent."""
+    cols = ["url", "sent_id", "tokens", "deps"]
+    if "sent_text" in sentences.columns:
+        cols.append("sent_text")
+    return sentence_stage(
+        sentences, cols, preparsed_source(cols),
+        candidate_emitter(entity_a, entity_b, stop_ids, allow1, allow2),
+        CANDIDATES_SCHEMA)
 
 
 SLIM_COLS = [c for c in _COLS
@@ -364,15 +350,62 @@ SLIM_COLS = [c for c in _COLS
 
 
 def rows_to_pdf(rows, cols=None) -> pd.DataFrame:
-    """list-of-dict candidate rows -> pandas frame, built COLUMNAR (dict of
-    lists). pd.DataFrame(list_of_dicts) re-infers per row and is the
-    slowest constructor — this is the hot Arrow boundary.  ``cols``
-    selects a reduced column set (SLIM_COLS) for consumers that never
-    read the S14 sentence columns."""
+    """list-of-dict rows -> pandas frame, built COLUMNAR (dict of lists).
+    pd.DataFrame(list_of_dicts) re-infers per row and is the slowest
+    constructor — this is the hot Arrow boundary.  ``cols`` names the
+    output columns in schema order (default: the candidate columns;
+    SLIM_COLS for consumers that never read the S14 sentence columns)."""
     if cols is None:
         cols = _COLS
     if not rows:
         # empty columns MUST be object-dtype: a bare [] infers float64,
-        # which Arrow cannot convert to list<string> fields
+        # which Arrow cannot convert to list/struct/binary fields
         return pd.DataFrame({c: pd.Series([], dtype=object) for c in cols})
     return pd.DataFrame({c: [r[c] for r in rows] for c in cols})
+
+
+def sentence_stage(df: DataFrame, in_cols, source, emit, schema: str,
+                   cols=None) -> DataFrame:
+    """The parse-and-collect kernel behind every sentence-level
+    ``mapInPandas``: per Arrow batch, zip the ``in_cols`` columns; per
+    input row, ``source(*values)`` yields sentence dicts (url, sent_id,
+    sent_text, tokens, deps, or the subset ``emit`` reads);
+    ``emit(sentence)`` maps each to output row dicts; ``rows_to_pdf(rows, cols)`` builds the batch that crosses
+    back to the JVM under ``schema``."""
+
+    def run(batches):
+        for pdf in batches:
+            rows = []
+            for vals in zip(*[pdf[c] for c in in_cols]):
+                for s in source(*vals):
+                    rows.extend(emit(s))
+            yield rows_to_pdf(rows, cols)
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def preparsed_source(cols):
+    """Source for pre-parsed sentence rows: the row named by ``cols`` is
+    the one sentence it yields."""
+    return lambda *vals: (dict(zip(cols, vals)),)
+
+
+def sentence_as_row(s):
+    """Identity emitter: the sentence dict is the output row."""
+    return (s,)
+
+
+def candidate_emitter(entity_a: str, entity_b: str, stop_ids,
+                      allow1=None, allow2=None):
+    """sentence dict -> candidate rows; the stop list and allowlists are
+    frozen once per stage and ship in the closure."""
+    stop = frozenset(stop_ids)
+    a1 = frozenset(allow1) if allow1 is not None else None
+    a2 = frozenset(allow2) if allow2 is not None else None
+
+    def emit(s):
+        return sentence_candidates(s["url"], s["sent_id"], s["tokens"],
+                                   s["deps"], entity_a, entity_b, stop,
+                                   a1, a2, sent_text=s.get("sent_text"))
+
+    return emit

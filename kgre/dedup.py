@@ -196,14 +196,6 @@ def _minhash_signatures_from_shingles(sh: DataFrame,
     )
 
 
-def minhash_signatures(docs: DataFrame, n_hashes: int = 8,
-                       shingle_n: int = 3) -> DataFrame:
-    """(doc_id, sig array<string>): per seed, the lexicographic min of
-    md5(shingle || '#' || seed) — engine-portable MinHash."""
-    return _minhash_signatures_from_shingles(shingles(docs, shingle_n),
-                                             n_hashes)
-
-
 def _lsh_candidates_from_shingles(sh: DataFrame, n_hashes: int, bands: int,
                                   max_bucket: int | None,
                                   stats: dict | None) -> DataFrame:

@@ -36,47 +36,25 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def _dot_and_sqnorm(a, b):
-    """(a . b, |a|^2) in ONE array-fold (r6): the per-row corpus pass
-    walks each embedding once instead of three times.  Both accumulators
-    add in the same element order as the separate ``_dot`` folds, so the
-    doubles are bit-identical."""
-    pair = F.zip_with(
-        a, b,
-        lambda x, y: F.struct(
-            (x.cast("double") * y.cast("double")).alias("xy"),
-            (x.cast("double") * x.cast("double")).alias("xx")))
-    return F.aggregate(
-        pair,
-        F.struct(F.lit(0.0).alias("dot"), F.lit(0.0).alias("n2")),
-        lambda acc, v: F.struct((acc["dot"] + v["xy"]).alias("dot"),
-                                (acc["n2"] + v["xx"]).alias("n2")))
-
-
 def cosine_topk(embs: DataFrame, query_id: int, k: int = 10) -> DataFrame:
     """Top-k neighbors of one vector by cosine, excluding itself.
     Deterministic ordering: (sim desc, vec_id asc).
 
-    The query norm is computed ONCE on the broadcast side (r6) — it is
-    constant across the corpus — and the corpus side folds dot product
-    and squared norm in one pass; same arithmetic per element, so
-    similarities are bit-identical to the three-fold form."""
+    The query norm is computed ONCE on the broadcast side — it is
+    constant across the corpus."""
     q = embs.filter(F.col("vec_id") == query_id).select(
         F.col("embedding").alias("q_emb"),
         _norm(F.col("embedding")).alias("q_norm"),
     )
-    acc = _dot_and_sqnorm(F.col("embedding"), F.col("q_emb"))
     scored = (
         embs.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != query_id)
-        # two-step projection: _acc is referenced twice below, and
-        # CollapseProject keeps the fold single-evaluated only because
-        # the alias is consumed more than once
-        .select("vec_id", acc.alias("_acc"), "q_norm")
         .select(
             "vec_id",
-            (F.col("_acc.dot") / (F.sqrt(F.col("_acc.n2"))
-                                  * F.col("q_norm"))).alias("_sim"),
+            (
+                _dot(F.col("embedding"), F.col("q_emb"))
+                / (_norm(F.col("embedding")) * F.col("q_norm"))
+            ).alias("_sim"),
         )
     )
     # order by the UNROUNDED similarity (ties after rounding would make

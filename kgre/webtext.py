@@ -10,10 +10,10 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgre.candidates import rows_to_pdf
 from kgre.synthgen import HTML_TEMPLATE, N_GENES, N_GO, PAGES_SCHEMA
 from kgre.util import ensure_min_partitions, h48, hseq
 
@@ -22,18 +22,7 @@ _TS_BASE = datetime(2024, 1, 1)
 # bump when doc_to_page semantics change — benchmark corpus caches key on it
 WEBTEXT_VERSION = "v1"
 
-
-
 _PAGE_COLS = ["url", "warc_ts", "html", "text", "lang"]
-
-
-def _pages_pdf(rows):
-    if not rows:
-        # object-dtype empties: bare [] infers float64, breaking Arrow
-        # conversion for binary/timestamp fields
-        return pd.DataFrame({c: pd.Series([], dtype=object)
-                             for c in _PAGE_COLS})
-    return pd.DataFrame({c: [r[c] for r in rows] for c in _PAGE_COLS})
 
 
 def page_text(doc_id: int, text: str) -> str:
@@ -91,7 +80,7 @@ def pages_from_documents(docs: DataFrame, lang: str | None = None) -> DataFrame:
                 doc_to_page(int(d), t, l)
                 for d, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"])
             ]
-            yield _pages_pdf(rows)
+            yield rows_to_pdf(rows, _PAGE_COLS)
 
     slim = docs.select("doc_id", "text", "lang")
     if lang is not None:
@@ -123,7 +112,7 @@ def scaled_corpus(docs: DataFrame, n_pages: int) -> DataFrame:
                 i = int(i)
                 _, text, lang = rows_base[i % nb]
                 rows.append(doc_to_page(i, text, lang))
-            yield _pages_pdf(rows)
+            yield rows_to_pdf(rows, _PAGE_COLS)
 
     rng = spark.range(0, n_pages, 1, n_parts)
     return rng.mapInPandas(run, schema=PAGES_SCHEMA)

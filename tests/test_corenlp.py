@@ -252,3 +252,31 @@ def test_corenlp_on_error_skip_and_audit(spark, tmp_path):
     assert len(audit) == 1
     assert audit[0]["path"].endswith("bad.txt")
     assert "ParseError" in audit[0]["error"]
+
+
+def test_fused_corenlp_candidates_equal_two_stage(spark, tmp_path):
+    """The fused XML -> candidates stage equals corenlp_xml_to_sentences
+    chained into candidates_from_sentences, as multisets.  A corrupt file
+    is skipped by the fused stage and left out at the listing for the
+    chain."""
+    from kgre import synthgen
+    from kgre.candidates import candidates_from_sentences
+    from kgre.corenlp import (_binary_reader, corenlp_files_to_candidates,
+                              corenlp_xml_to_sentences)
+
+    xml_dir = tmp_path / "xml"
+    xml_dir.mkdir()
+    for i, (url, rows) in enumerate(sorted(_stub_sentences(30).items())):
+        (xml_dir / f"d{i}.txt").write_bytes(rows_to_corenlp_xml(url, rows))
+    (xml_dir / "bad.txt").write_bytes(b"<root><document><sentenc")
+    stop = synthgen.stop_entity_ids()
+    fused = corenlp_files_to_candidates(
+        _binary_reader(spark, "*.txt", False).load(str(xml_dir)),
+        "GENE", "ONTOLOGY", stop, on_error="skip")
+    two = candidates_from_sentences(
+        corenlp_xml_to_sentences(
+            _binary_reader(spark, "d*.txt", False).load(str(xml_dir))),
+        "GENE", "ONTOLOGY", stop)
+    assert fused.columns == two.columns
+    a = sorted(tuple(r) for r in fused.collect())
+    assert a and a == sorted(tuple(r) for r in two.collect())

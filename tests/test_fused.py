@@ -72,3 +72,46 @@ def test_fused_respects_stop_and_allowlists(spark):
                                     allow1=allow1, allow2=allow2)
     assert (sorted(tuple(r) for r in two.collect())
             == sorted(tuple(r) for r in fused.collect()))
+
+
+def test_pages_mentions_equal_two_stage(spark):
+    """The fused pages -> mentions stage equals parse_sentences chained
+    into sentences_to_mentions, as multisets."""
+    from kgre.parse import parse_sentences
+    from kgre.pipeline import pages_to_mentions, sentences_to_mentions
+
+    pages = spark.createDataFrame(
+        [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
+         for p in synthgen.gen_pages_rows(40)],
+        schema=synthgen.PAGES_SCHEMA)
+    fused = pages_to_mentions(pages, "HUMAN_GENE", "ONTOLOGY")
+    two = sentences_to_mentions(parse_sentences(pages), "HUMAN_GENE",
+                                "ONTOLOGY")
+    a = sorted(tuple(r) for r in fused.collect())
+    assert a == sorted(tuple(r) for r in two.collect())
+    assert {r[1] for r in a} == {"e1", "e2"}
+
+
+def test_empty_python_batches_yield_no_rows(spark, tmp_path):
+    """Inputs where every Python batch yields zero sentences: each ingest
+    path returns an empty result instead of failing to convert an empty
+    frame to Arrow."""
+    from kgre.corenlp import read_corenlp_xml
+    from kgre.parse import parse_sentences
+    from kgre.pipeline import pages_to_mentions
+
+    texts = spark.createDataFrame(
+        [("u1", "   ", "en"), ("u2", "...", "en")],
+        "url string, text string, lang string")
+    assert parse_sentences(texts).count() == 0
+    pages = spark.createDataFrame(
+        [("u1", b"<html><body>no article</body></html>", "en"),
+         ("u2", b"<article><p> . . </p></article>", "en"),
+         ("u3", b"", "en")],
+        "url string, html binary, lang string")
+    stop = synthgen.stop_entity_ids()
+    assert pages_to_candidates(pages, "GENE", "ONTOLOGY", stop).count() == 0
+    assert pages_to_mentions(pages, "GENE", "ONTOLOGY").count() == 0
+    (tmp_path / "empty.txt").write_bytes(
+        b"<root><document><sentences/></document></root>")
+    assert read_corenlp_xml(spark, str(tmp_path)).count() == 0

@@ -370,9 +370,9 @@ def test_empty_batch_frames_are_object_dtype():
     import pandas as pd
 
     from kgre.candidates import rows_to_pdf
-    from kgre.webtext import _pages_pdf
+    from kgre.webtext import _PAGE_COLS
 
-    for pdf in (rows_to_pdf([]), _pages_pdf([])):
+    for pdf in (rows_to_pdf([]), rows_to_pdf([], _PAGE_COLS)):
         assert len(pdf) == 0
         assert all(dt == object for dt in pdf.dtypes)
 
