@@ -87,10 +87,10 @@ def _cents(col):
 def _kg_scored(spark, docs):
     """Shared flagship tail: fused documents->candidates stage (ONE
     Python crossing, r6 — equality with the two-stage pages path pinned
-    by tests/test_fused.py) -> vocab sets -> scoring.  TEST mode needs
-    neither the S14 sentence columns nor the vocab dense-id ranking, so
-    both stay out of the plan (guide §1.2: don't compute what you throw
-    away)."""
+    by tests/test_fused.py) -> ``KgPipeline.run_from_candidates`` (vocab
+    sets from the pruned counts -> scoring).  TEST mode needs no S14
+    sentence columns, so the slim candidates schema keeps them out of
+    the plan (guide §1.2: don't compute what you throw away)."""
     from kgre.pipeline import documents_to_candidates
     cands = documents_to_candidates(docs, "GENE", "ONTOLOGY",
                                     synthgen.stop_entity_ids(),
@@ -98,7 +98,7 @@ def _kg_scored(spark, docs):
     pipe = KgPipeline(spark, occur_count=2)
     scored, _, _ = pipe.run_from_candidates(
         cands, synthgen.kb_rows(), synthgen.ontology_rows(),
-        emit_threshold=0.5, need_vocab_ids=False)
+        emit_threshold=0.5)
     return scored
 
 
@@ -170,15 +170,8 @@ def _q_entity_distribution(spark, sf_dir):
 
 def _q_label_join(spark, sf_dir):
     kb = spark.createDataFrame(_KB_WORDS, "word string, rel string")
-    # row-local semi-join before the explode (guide §2.3 "project before
-    # the exchange"): only tokens matching the 5-word KB explode — the
-    # distinct-shuffle input drops from every token to <=|KB| rows/doc.
-    # array_distinct is safe because the output is DISTINCT (doc_id, rel).
-    kb_words = [w for w, _ in _KB_WORDS]
-    matched = F.array_distinct(
-        F.filter(F.split("text", " "), lambda t: t.isin(kb_words)))
     tok = _docs(spark, sf_dir).select(
-        "doc_id", F.explode(matched).alias("word"))
+        "doc_id", F.explode(F.split("text", " ")).alias("word"))
     return tok.join(F.broadcast(kb), "word").select("doc_id", "rel").distinct()
 
 
@@ -236,7 +229,10 @@ def _q_window_tumbling(spark, sf_dir):
     # not per row (guide §2.3: narrower grouping key in the exchange, and
     # the date_format run count drops from |events| to |groups|);
     # date_format is deterministic per distinct truncated ts, so the
-    # result is identical
+    # result is identical.  Both date_trunc and date_format read the
+    # session time zone: the hour buckets equal the oracle's UTC hours
+    # only because session.py pins spark.sql.session.timeZone=UTC (a zone
+    # with a non-whole-hour offset would shift every bucket boundary)
     return (_events(spark, sf_dir)
             .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour_ts"),
                      "event_type")

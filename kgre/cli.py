@@ -103,6 +103,39 @@ def _load_candidates(spark, args, a1, a2):
                                allow1=a1, allow2=a2)
 
 
+def _resume_candidates(spark, args, pages, a1=None, a2=None):
+    """Lineage-manifest resume (north_rule): the candidates stage runs per
+    url-hash bucket into ``out/candidates``; a rerun recomputes ONLY the
+    buckets missing from ``out/manifest`` (the reference's
+    skip-if-.tfrecord-exists, relation_extraction.py:393-399, made
+    per-partition + crash-safe)."""
+    from kgre.lineage import run_stage_with_resume
+
+    stop = synthgen.stop_entity_ids()
+    return run_stage_with_resume(
+        spark, pages, "candidates",
+        lambda part: pages_to_candidates(part, args.entity_a, args.entity_b,
+                                         stop, min_partitions=0,
+                                         allow1=a1, allow2=a2),
+        args.out + "/candidates", args.out + "/manifest",
+        n_buckets=args.buckets)
+
+
+def _score(spark, args, cands, **kw):
+    """candidates -> (scored, vocab, key_order) through the one
+    ``KgPipeline.run_from_candidates`` tail."""
+    return _pipe(spark, args).run_from_candidates(
+        cands, synthgen.kb_rows(), synthgen.ontology_rows(), **kw)
+
+
+def _sink(spark, df, path) -> int:
+    """Write ``df`` partitioned by rel, release the candidates the tail
+    persisted (the CLI owns its session) and return the rows written."""
+    write_triples(df, path)
+    spark.catalog.clearCache()
+    return spark.read.parquet(path).count()
+
+
 def mode_build(spark, args):
     a1, a2 = _allowlists(args)
     cands = _load_candidates(spark, args, a1, a2)
@@ -115,76 +148,34 @@ def mode_build(spark, args):
 
 
 def mode_score(spark, args):
-    pipe = _pipe(spark, args)
     a1, a2 = _allowlists(args)
-    if args.corenlp_xml:
-        if args.resume:
+    if args.resume:
+        if args.corenlp_xml:
             raise SystemExit(
                 "--resume buckets by page url; not supported with "
                 "--corenlp-xml (run without --resume)")
-        cands = _load_candidates(spark, args, a1, a2)
-        scored, _, key_order = pipe.run_from_candidates(
-            cands, synthgen.kb_rows(), synthgen.ontology_rows(),
-            checkpoint_dir=(args.out + "/candidates") if args.checkpoint
-            else None,
-            emit_threshold=0.5)
-        write_triples(emitted_triples(scored), args.out + "/triples")
-        n = spark.read.parquet(args.out + "/triples").count()
-        print("SCORE ok: emitted=%d rels=%d" % (n, len(key_order)))
-        return
-    pages = _load_pages(spark, args)
-    if args.resume:
-        # lineage-manifest resume (north_rule): the candidates stage runs
-        # per url-hash bucket; a rerun recomputes ONLY buckets missing
-        # from the manifest, then vocab/scoring read the materialized
-        # stage output (the reference's skip-if-.tfrecord-exists,
-        # relation_extraction.py:393-399, made per-partition + crash-safe)
-        from kgre.lineage import run_stage_with_resume
-        from kgre.score import score_candidates
-        from kgre.vocab import build_vocab, collect_vocab_sets
-
-        fwd, rev, key_order = pipe.prepare_kb(synthgen.kb_rows(),
-                                              synthgen.ontology_rows())
-        stop = synthgen.stop_entity_ids()
-        cands = run_stage_with_resume(
-            spark, pages, "candidates",
-            lambda part: pages_to_candidates(part, args.entity_a,
-                                             args.entity_b, stop,
-                                             min_partitions=0,
-                                             allow1=a1, allow2=a2),
-            args.out + "/candidates", args.out + "/manifest",
-            n_buckets=args.buckets)
-        vocabs = collect_vocab_sets(build_vocab(cands, args.occur_count))
-        scored = score_candidates(cands, vocabs, key_order, fwd, rev,
-                                  emit_threshold=0.5)
+        cands = _resume_candidates(spark, args, _load_pages(spark, args),
+                                   a1, a2)
     else:
-        scored, vocab_df, key_order = pipe.run(
-            pages, synthgen.kb_rows(), synthgen.ontology_rows(),
-            synthgen.stop_entity_ids(),
-            checkpoint_dir=(args.out + "/candidates") if args.checkpoint
-            else None,
-            allow1=a1, allow2=a2, emit_threshold=0.5)
-    write_triples(emitted_triples(scored), args.out + "/triples")
-    n = spark.read.parquet(args.out + "/triples").count()
+        cands = _load_candidates(spark, args, a1, a2)
+    # --resume already reads its candidates from out/candidates, so the
+    # tail must not checkpoint over them
+    ckpt = (args.out + "/candidates"
+            if args.checkpoint and not args.resume else None)
+    scored, _, key_order = _score(spark, args, cands, checkpoint_dir=ckpt,
+                                  emit_threshold=0.5)
+    n = _sink(spark, emitted_triples(scored), args.out + "/triples")
     print("SCORE ok: emitted=%d rels=%d" % (n, len(key_order)))
 
 
 def mode_predict(spark, args):
     from kgre.score import highlight_sentences
 
-    pipe = _pipe(spark, args)
     a1, a2 = _allowlists(args)
-    if args.corenlp_xml:
-        # XML sentences carry sent_text, so the highlight sink works
-        # identically off the pre-parsed path
-        scored, _, _ = pipe.run_from_candidates(
-            _load_candidates(spark, args, a1, a2), synthgen.kb_rows(),
-            synthgen.ontology_rows(), with_sentence=True)
-    else:
-        scored, _, _ = pipe.run(_load_pages(spark, args), synthgen.kb_rows(),
-                                synthgen.ontology_rows(),
-                                synthgen.stop_entity_ids(),
-                                allow1=a1, allow2=a2, with_sentence=True)
+    # both ingest paths carry sent_text, so the highlight sink works
+    # identically off the pre-parsed CoreNLP path
+    scored, _, _ = _score(spark, args, _load_candidates(spark, args, a1, a2),
+                          with_sentence=True)
     # rich sink S14: all pairs with probabilities, no 0.5 gate; label is
     # -1 in predict mode (build_instances_predict, load_data.py:336-338),
     # and each row carries the ***entity***-highlighted sentence in the
@@ -196,10 +187,8 @@ def mode_predict(spark, args):
         F.concat_ws("\t", "url", "subj", "obj",
                     F.col("label").cast("string"),
                     F.round("prob", 6).cast("string"), "sentence"))
-    out.drop("sent_text").write.mode("overwrite").partitionBy("rel").parquet(
-        args.out + "/predictions")
-    print("PREDICT ok: rows=%d" %
-          spark.read.parquet(args.out + "/predictions").count())
+    n = _sink(spark, out.drop("sent_text"), args.out + "/predictions")
+    print("PREDICT ok: rows=%d" % n)
 
 
 def mode_eval_data(spark, args):
@@ -237,9 +226,8 @@ def mode_train(spark, args):
     vocab_df = build_vocab(cands, args.occur_count)
     vocab_df.write.mode("overwrite").parquet(args.out + "/vocab")
     vocabs = collect_vocab_sets(vocab_df)
-    closure = kbmod.ontology_closure_dict(synthgen.ontology_rows())
-    fwd, rev = kbmod.load_kb_sets(synthgen.kb_rows(), closure)
-    key_order = sorted(fwd)
+    fwd, rev, key_order = _pipe(spark, args).prepare_kb(
+        synthgen.kb_rows(), synthgen.ontology_rows())
     wt, losses = train.train_model(cands, vocabs, key_order, fwd, rev,
                                    epochs=args.epochs)
     train.weights_to_df(spark, wt, key_order).write.mode(
@@ -260,9 +248,8 @@ def mode_train_lstm(spark, args):
     # bounded distributed vocab build — no unbounded driver collect
     dep_vocab, word_vocab = lstm.lstm_vocab_features(
         cands, max_words=args.lstm_max_words)
-    closure = kbmod.ontology_closure_dict(synthgen.ontology_rows())
-    fwd, rev = kbmod.load_kb_sets(synthgen.kb_rows(), closure)
-    key_order = sorted(fwd)
+    fwd, rev, key_order = _pipe(spark, args).prepare_kb(
+        synthgen.kb_rows(), synthgen.ontology_rows())
     params, losses = lstm_train.train_lstm_model(
         cands, dep_vocab, word_vocab, key_order, fwd, rev,
         epochs=args.epochs)
@@ -288,9 +275,6 @@ def mode_clean(spark, args):
       triples/          emitted triples partitioned by rel
     """
     from kgre.clean import clean_documents
-    from kgre.lineage import run_stage_with_resume
-    from kgre.score import score_candidates
-    from kgre.vocab import collect_vocab_sets
 
     if args.corenlp_xml:
         raise SystemExit("clean mode operates on --documents; "
@@ -327,22 +311,10 @@ def mode_clean(spark, args):
     ).write.mode("overwrite").parquet(args.out + "/clean_manifest")
     # 4. KG pipeline over the cleaned corpus, candidates stage bucketed
     # through the lineage manifest (crash-safe resume)
-    pipe = _pipe(spark, args)
-    fwd, rev, key_order = pipe.prepare_kb(synthgen.kb_rows(),
-                                          synthgen.ontology_rows())
-    stop = synthgen.stop_entity_ids()
-    pages = webtext.pages_from_documents(clean, lang="en")
-    cands = run_stage_with_resume(
-        spark, pages, "candidates",
-        lambda part: pages_to_candidates(part, args.entity_a, args.entity_b,
-                                         stop, min_partitions=0),
-        args.out + "/candidates", args.out + "/manifest",
-        n_buckets=args.buckets)
-    vocabs = collect_vocab_sets(build_vocab(cands, args.occur_count))
-    scored = score_candidates(cands, vocabs, key_order, fwd, rev,
-                              emit_threshold=0.5)
-    write_triples(emitted_triples(scored), args.out + "/triples")
-    n_triples = spark.read.parquet(args.out + "/triples").count()
+    cands = _resume_candidates(
+        spark, args, webtext.pages_from_documents(clean, lang="en"))
+    scored, _, _ = _score(spark, args, cands, emit_threshold=0.5)
+    n_triples = _sink(spark, emitted_triples(scored), args.out + "/triples")
     url_note = ""
     if "url_dedup" in by_stage:
         url_note = ("url %d -> %d; "
@@ -450,7 +422,8 @@ def main(argv=None):
                         "the near_dedup_caps row")
     p.add_argument("--checkpoint", action="store_true",
                    help="materialize the candidates stage to parquet "
-                        "(the reference's TFRecord boundary)")
+                        "(the reference's TFRecord boundary); --resume "
+                        "already does, so it is ignored there")
     p.add_argument("--reliable-checkpoint", metavar="DIR", default=None,
                    help="store stage checkpoints as recoverable "
                         ".checkpoint() files under DIR (HDFS path on a "

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from kgre import train as train_mod
 from kgre.score import score_candidates
-from kgre.vocab import build_vocab, collect_vocab_sets
+from kgre.vocab import collect_vocab_sets, pruned_vocab_counts
 
 
 def pmid_fold_chunks(pmids: list, k: int) -> list[list]:
@@ -103,7 +103,8 @@ def k_fold_cv(candidates: DataFrame, k: int, key_order, fwd_kb, rev_kb,
         train_c = chunked.filter(F.col("chunk") != fold).drop("chunk")
         test_c = chunked.filter(F.col("chunk") == fold).drop("chunk")
         # per-fold dictionaries from TRAINING sentences only
-        vocabs = collect_vocab_sets(build_vocab(train_c, occur_count))
+        vocabs = collect_vocab_sets(
+            pruned_vocab_counts(train_c, occur_count))
         wt, _ = train_mod.train_model(train_c, vocabs, key_order, fwd_kb,
                                       rev_kb, epochs=epochs, sample=sample)
         scored = score_candidates(test_c, vocabs, key_order, fwd_kb,

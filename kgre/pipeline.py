@@ -3,13 +3,15 @@
 Physical plan (SURVEY.md §4.3):
 
   scan pages (lang filter pushed to scan, html pruned into extract only)
-   -> [optional repartition(url-hash)] even work units before Python
+   -> url-hash repartition when the scan yields too few splits
+      (ensure_min_partitions): even work units before Python
    -> mapInPandas: extract html->text + sentence split/parse + candidate
       features  (ONE fused Arrow stage — a single JVM->Python crossing for
       the whole per-row path)
    -> checkpoint: candidates parquet (the reference's TFRecord boundary,
       S10) — consumed twice (vocab agg + scoring) without recompute
-   -> groupBy vocab counts (single shuffle, map-side partial agg)
+   -> groupBy vocab counts (single shuffle, map-side partial agg),
+      min-count pruned; the feature sets are collected to the driver
    -> mapInPandas score over broadcast {weights, vocab, KB} -> triples
    -> triples sink partitioned by rel
 
@@ -34,7 +36,7 @@ from kgre.extract import extract_text_from_html
 from kgre.parse import text_sentences
 from kgre.score import score_candidates
 from kgre.util import ensure_min_partitions
-from kgre.vocab import collect_vocab_sets, two_phase_dense_ids, vocab_counts
+from kgre.vocab import collect_vocab_sets, pruned_vocab_counts
 from kgre.webtext import doc_to_page, page_text
 
 
@@ -172,41 +174,36 @@ class KgPipeline:
 
     def run(self, pages: DataFrame, kb_rows_list, onto_rows, stop_ids,
             checkpoint_dir: str | None = None,
-            repartition: int | None = None,
             allow1=None, allow2=None, with_sentence: bool = False,
-            emit_threshold: float | None = None,
-            need_vocab_ids: bool = True):
-        """pages -> (scored triples DF, vocab DF, key_order).
-
-        ``emit_threshold=0.5`` pushes the emitted-triple gate into the
-        scoring UDF (TEST mode); leave None to keep every row (predict)."""
-        if repartition:
-            pages = pages.repartition(repartition, "url")
+            emit_threshold: float | None = None):
+        """pages -> (scored triples DF, vocab DF, key_order): the fused
+        ingest stage, then ``run_from_candidates``."""
         cands = pages_to_candidates(pages, self.entity_a, self.entity_b,
                                     stop_ids, allow1=allow1, allow2=allow2)
         return self.run_from_candidates(
             cands, kb_rows_list, onto_rows, checkpoint_dir=checkpoint_dir,
-            with_sentence=with_sentence, emit_threshold=emit_threshold,
-            need_vocab_ids=need_vocab_ids)
+            with_sentence=with_sentence, emit_threshold=emit_threshold)
 
     def run_from_candidates(self, cands: DataFrame, kb_rows_list, onto_rows,
                             checkpoint_dir: str | None = None,
                             with_sentence: bool = False,
-                            emit_threshold: float | None = None,
-                            need_vocab_ids: bool = True):
-        """candidates -> (scored triples DF, vocab DF, key_order) — the
-        vocab + scoring tail of ``run``, exposed so pre-parsed corpora
-        (CoreNLP XML via kgre.corenlp -> candidates_from_sentences) enter
-        the same plan after the ingest stage.
+                            emit_threshold: float | None = None):
+        """candidates -> (scored triples DF, vocab DF, key_order) — the one
+        vocab + scoring tail: every ingest path (html pages, documents,
+        CoreNLP XML, lineage-bucketed resume) enters here after its
+        candidates stage.
 
-        ``need_vocab_ids=False`` (r6): scoring only needs the vocabulary
-        feature SETS (weights are keyed by feature string, kgre/model.py)
-        — the dense-id RANKING (two-phase rank: range shuffle + eager
-        checkpoint + count job + window) is built only when the caller
-        consumes the vocab table (CLI vocab sink, CV folds).  With False
-        the returned vocab DF is the pruned (kind, feature, cnt) counts
-        without ids, and the flagship scoring path runs two jobs instead
-        of four."""
+        The vocab DF is the pruned ``(kind, feature, cnt)`` counts:
+        scoring reads only the feature SETS (weights are keyed by feature
+        string, kgre/model.py), so no dense ids are built here
+        (``vocab.build_vocab`` serves the vocab table sinks).
+
+        ``checkpoint_dir`` materializes the candidates there first; it must
+        not be the directory ``cands`` is read from.  Without it the
+        candidates are persisted — the caller releases that cache entry
+        once its sink has run.  ``emit_threshold=0.5`` pushes the
+        emitted-triple gate into the scoring UDF (TEST mode); leave None
+        to keep every row (predict)."""
         fwd, rev, key_order = self.prepare_kb(kb_rows_list, onto_rows)
         if checkpoint_dir:
             # materialized stage boundary (reference: per-file TFRecord
@@ -228,17 +225,9 @@ class KgPipeline:
             # cache is materialized by the (single-scan) vocab job and
             # reused by the scoring job
             cands = cands.persist()
-        counts = vocab_counts(cands).filter(
-            F.col("cnt") >= self.occur_count)
-        if need_vocab_ids:
-            vocab_df = two_phase_dense_ids(
-                counts, ["kind"], [F.desc("cnt"), F.asc("feature")])
-        else:
-            vocab_df = counts
-        # collect_vocab_sets only reads (kind, feature): with ids it
-        # reads the two-phase checkpoint; without, the pruned counts
-        vocabs = collect_vocab_sets(vocab_df)
-        scored = score_candidates(cands, vocabs, key_order, fwd, rev,
+        vocab_df = pruned_vocab_counts(cands, self.occur_count)
+        scored = score_candidates(cands, collect_vocab_sets(vocab_df),
+                                  key_order, fwd, rev,
                                   with_sentence=with_sentence,
                                   emit_threshold=emit_threshold)
         return scored, vocab_df, key_order

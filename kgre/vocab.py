@@ -1,10 +1,13 @@
 """Vocabulary aggregation (A1, reference build_dataset load_data.py:106-131).
 
-Count every feature occurrence corpus-wide, prune below ``occur_count``
-(reference uses 100 for feed-forward vocabularies), and assign dense ids by
-(count desc, feature asc) — a deterministic tie-break replacing Python
-``Counter`` insertion order (SURVEY.md A1 note; acceptable because model
-weights are keyed by feature *string*, never dense id, SURVEY.md §7.4.2).
+Count every feature occurrence corpus-wide and prune below
+``occur_count`` (reference uses 100 for feed-forward vocabularies).
+Scoring and training only need the pruned feature SETS, because model
+weights are keyed by feature *string*, never dense id (SURVEY.md §7.4.2).
+Dense ids, by (count desc, feature asc) — a deterministic tie-break
+replacing Python ``Counter`` insertion order (SURVEY.md A1 note) — are
+built only for the vocab table sinks (``build_vocab``: CLI ``build`` and
+``train``).
 
 Counts include BOTH forward and reverse instances regardless of
 gene_to_gene (the reference always feeds both into the vocab lists,
@@ -120,13 +123,19 @@ def two_phase_dense_ids(df: DataFrame, partition_cols, order_cols,
             .drop("_pid", "_opid", "_off", *["_og_" + c for c in gcols]))
 
 
+def pruned_vocab_counts(candidates: DataFrame,
+                        occur_count: int) -> DataFrame:
+    """(kind, feature, cnt) with cnt >= ``occur_count`` — the vocabulary
+    the scorer and trainer read (load_data.py:114-119 boundary)."""
+    return vocab_counts(candidates).filter(F.col("cnt") >= occur_count)
+
+
 def build_vocab(candidates: DataFrame, occur_count: int) -> DataFrame:
     """(kind, feature, cnt, id) with min-count pruning and deterministic
     dense ids per kind (two-phase rank — per-kind groups never collapse
     to one task when min-count is low at corpus scale)."""
-    counts = vocab_counts(candidates).filter(F.col("cnt") >= occur_count)
-    return two_phase_dense_ids(counts, ["kind"],
-                               [F.desc("cnt"), F.asc("feature")])
+    return two_phase_dense_ids(pruned_vocab_counts(candidates, occur_count),
+                               ["kind"], [F.desc("cnt"), F.asc("feature")])
 
 
 def collect_vocab_sets(vocab: DataFrame) -> dict[str, set]:

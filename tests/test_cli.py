@@ -18,9 +18,16 @@ def _run(spark, monkeypatch, mode, out, extra=()):
               "--out", out, *extra])
 
 
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_cli_score_and_build(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "score")
+    spark.catalog.clearCache()
     _run(spark, monkeypatch, "score", out)
+    # the tail's persisted candidates are released after the sink
+    assert _cache_empty(spark), "score left a cached plan"
     triples = spark.read.parquet(out + "/triples")
     assert triples.count() > 0
     assert set(triples.columns) >= {"url", "subj", "obj", "rel", "prob"}
@@ -36,7 +43,9 @@ def test_cli_score_and_build(spark, tmp_path, monkeypatch):
 
 def test_cli_predict_and_eval(spark, tmp_path, monkeypatch):
     out = str(tmp_path / "pred")
+    spark.catalog.clearCache()
     _run(spark, monkeypatch, "predict", out)
+    assert _cache_empty(spark), "predict left a cached plan"
     preds = spark.read.parquet(out + "/predictions")
     # predict keeps every instance row (no prob>0.5 gate)
     assert preds.count() >= preds.filter("prob > 0.5").count() > 0
@@ -80,17 +89,23 @@ def test_cli_train(spark, tmp_path, monkeypatch):
 
 
 def test_cli_score_resume_matches_plain(spark, tmp_path, monkeypatch):
-    """--resume (lineage-bucketed candidates stage) must emit the same
-    triples as the plain path, and a rerun must skip all buckets."""
+    """--resume (lineage-bucketed candidates stage) and --checkpoint
+    (materialized candidates parquet) must emit the same triples as the
+    plain path, and a rerun must skip all buckets."""
     plain, res = str(tmp_path / "plain"), str(tmp_path / "res")
+    ckpt = str(tmp_path / "ckpt")
     _run(spark, monkeypatch, "score", plain)
     _run(spark, monkeypatch, "score", res, extra=("--resume", "--buckets", "4"))
+    _run(spark, monkeypatch, "score", ckpt, extra=("--checkpoint",))
     key = ["url", "sent_id", "pair_idx", "is_reverse", "rel"]
     a = {tuple(r) for r in
          spark.read.parquet(plain + "/triples").select(*key).collect()}
     b = {tuple(r) for r in
          spark.read.parquet(res + "/triples").select(*key).collect()}
-    assert a == b and a
+    c = {tuple(r) for r in
+         spark.read.parquet(ckpt + "/triples").select(*key).collect()}
+    assert a == b == c and a
+    assert spark.read.parquet(ckpt + "/candidates").count() > 0
     m1 = spark.read.parquet(res + "/manifest")
     assert m1.filter("status = 'ok'").count() == 4
     # rerun: all buckets already in the manifest -> no new rows

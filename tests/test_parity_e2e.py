@@ -90,6 +90,8 @@ def test_vocab_min_count_boundary(oracle_out, spark_out):
     """Features with count == occur_count are kept; below are dropped
     (load_data.py:114-119 boundary)."""
     _, _, vocab_df, _ = spark_out
+    # the scoring tail returns the pruned counts: no dense ids are built
+    assert vocab_df.columns == ["kind", "feature", "cnt"]
     counts = [r["cnt"] for r in vocab_df.collect()]
     assert counts and min(counts) >= OCCUR
     assert OCCUR in counts  # boundary value actually exercised
