@@ -186,6 +186,15 @@ def allowlist_keep(e1_ids, e2_ids, allow1, allow2) -> bool:
     return True
 
 
+def both_types_present(ner_keys, entity_a: str, entity_b: str) -> bool:
+    """F2 sentence filter (sentence_structure.py:134, load_data.py:392-393):
+    some NER key contains ``entity_a`` and some contains ``entity_b``
+    (substring match).  The parse-time screen of the text sources and the
+    early return of both emitters."""
+    return (any(entity_a in k for k in ner_keys)
+            and any(entity_b in k for k in ner_keys))
+
+
 def sentence_candidates(url, sent_id, tokens, deps, entity_a, entity_b, stop,
                         allow1=None, allow2=None, sent_text=None):
     """One parsed sentence -> candidate instance rows (forward + reverse;
@@ -204,10 +213,10 @@ def sentence_candidates(url, sent_id, tokens, deps, entity_a, entity_b, stop,
         # (whitespace-normalized) sentence text
         sent_text = " ".join(t["word"] for t in tokens)
     ents = _chunk_mentions(tokens)
+    if not both_types_present(ents, entity_a, entity_b):
+        return []
     t1 = sorted(k for k in ents if entity_a in k)
     t2 = sorted(k for k in ents if entity_b in k)
-    if not t1 or not t2:
-        return []
     cells, nbrs = _adjacency(deps)
     by_id = {t["id"]: t for t in tokens}
     by_id[0] = ROOT_TOKEN
@@ -273,7 +282,7 @@ def sentence_mention_rows(url, tokens, entity_a, entity_b):
     if len(tokens) and not isinstance(tokens[0], dict):
         tokens = [dict(t) for t in tokens]
     ents = _chunk_mentions(tokens)
-    if not any(entity_a in k for k in ents) or not any(entity_b in k for k in ents):
+    if not both_types_present(ents, entity_a, entity_b):
         return []
     by_id = {t["id"]: t for t in tokens}
     rows = []

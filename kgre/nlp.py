@@ -138,17 +138,25 @@ def build_deps(sent_text: str, n_tokens: int) -> list[dict]:
     return deps
 
 
+def ner_keys(sent_text: str) -> set[str]:
+    """The sentence's pipe-split NER keys, from the cached tagger alone
+    (the key set ``candidates._chunk_mentions`` builds from the tokens)."""
+    ners = {tag_word(w)[2] for w in sent_text.split()}
+    return {k for ner in ners for k in ner.split("|")}
+
+
+def parse_sentence(sent_id: int, sent: str) -> dict:
+    """one sentence -> sentence dict {sent_id, sent_text, tokens, deps}."""
+    toks = tokenize(sent)
+    return {
+        "sent_id": sent_id,
+        "sent_text": sent,
+        "tokens": toks,
+        "deps": build_deps(sent, len(toks)),
+    }
+
+
 def parse_text(text: str) -> list[dict]:
-    """page text -> list of sentence dicts {sent_id, text, tokens, deps}."""
-    out = []
-    for sid, sent in enumerate(split_sentences(text)):
-        toks = tokenize(sent)
-        out.append(
-            {
-                "sent_id": sid,
-                "sent_text": sent,
-                "tokens": toks,
-                "deps": build_deps(sent, len(toks)),
-            }
-        )
-    return out
+    """page text -> list of sentence dicts, every sentence parsed."""
+    return [parse_sentence(sid, sent)
+            for sid, sent in enumerate(split_sentences(text))]

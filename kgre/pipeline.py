@@ -5,9 +5,11 @@ Physical plan (SURVEY.md §4.3):
   scan pages (lang filter pushed to scan, html pruned into extract only)
    -> url-hash repartition when the scan yields too few splits
       (ensure_min_partitions): even work units before Python
-   -> mapInPandas: extract html->text + sentence split/parse + candidate
-      features  (ONE fused Arrow stage — a single JVM->Python crossing for
-      the whole per-row path)
+   -> mapInPandas: extract html->text -> sentence split -> F2 filter
+      (words tagged; a sentence without both entity types is dropped
+      here, before the parse) -> parse tokens + dependency edges ->
+      candidate features  (ONE fused Arrow stage — a single JVM->Python
+      crossing for the whole per-row path)
    -> checkpoint: candidates parquet (the reference's TFRecord boundary,
       S10) — consumed twice (vocab agg + scoring) without recompute
    -> groupBy vocab counts (single shuffle, map-side partial agg),
@@ -25,6 +27,8 @@ itself) over that kernel.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,18 +44,20 @@ from kgre.vocab import collect_vocab_sets, pruned_vocab_counts
 from kgre.webtext import doc_to_page, page_text
 
 
-def _page_sentences(url, html):
-    """html page source: extract the article text, then parse it."""
-    return text_sentences(url, extract_text_from_html(html))
+def _page_sentences(url, html, types):
+    """html page source: extract the article text, then parse the
+    sentences holding both entity ``types`` (the F2 filter runs first)."""
+    return text_sentences(url, extract_text_from_html(html), types)
 
 
-def _doc_sentences(doc_id, dtext):
-    """document source: the derived page text, parsed."""
+def _doc_sentences(doc_id, dtext, types):
+    """document source: the derived page text, screened and parsed like
+    ``_page_sentences``."""
     doc_id = int(doc_id)
     text = page_text(doc_id, dtext)
     if "</p></article>" in text:   # pragma: no cover
         text = extract_text_from_html(doc_to_page(doc_id, dtext, "")["html"])
-    return text_sentences("https://docs.example/d%d" % doc_id, text)
+    return text_sentences("https://docs.example/d%d" % doc_id, text, types)
 
 
 def pages_to_candidates(pages: DataFrame, entity_a: str, entity_b: str,
@@ -77,7 +83,8 @@ def pages_to_candidates(pages: DataFrame, entity_a: str, entity_b: str,
     slim = pages.filter(F.col("lang") == lang).select("url", "html")
     slim = ensure_min_partitions(slim, cols=("url",), target=min_partitions)
     return sentence_stage(
-        slim, ("url", "html"), _page_sentences,
+        slim, ("url", "html"),
+        partial(_page_sentences, types=(entity_a, entity_b)),
         candidate_emitter(entity_a, entity_b, stop_ids, allow1, allow2),
         CANDIDATES_SCHEMA)
 
@@ -115,7 +122,8 @@ def documents_to_candidates(docs: DataFrame, entity_a: str, entity_b: str,
     slim = ensure_min_partitions(slim, cols=("doc_id",),
                                  target=min_partitions)
     return sentence_stage(
-        slim, ("doc_id", "text"), _doc_sentences,
+        slim, ("doc_id", "text"),
+        partial(_doc_sentences, types=(entity_a, entity_b)),
         candidate_emitter(entity_a, entity_b, stop_ids, allow1, allow2),
         CANDIDATES_SCHEMA if with_sentence else SLIM_CANDIDATES_SCHEMA,
         None if with_sentence else SLIM_COLS)
@@ -135,7 +143,8 @@ def pages_to_mentions(pages: DataFrame, entity_a: str, entity_b: str,
     slim = pages.filter(F.col("lang") == lang).select("url", "html")
     slim = ensure_min_partitions(slim, cols=("url",), target=min_partitions)
     return sentence_stage(
-        slim, ("url", "html"), _page_sentences,
+        slim, ("url", "html"),
+        partial(_page_sentences, types=(entity_a, entity_b)),
         lambda s: sentence_mention_rows(s["url"], s["tokens"],
                                         entity_a, entity_b),
         MENTIONS_SCHEMA, _MENTION_COLS)

@@ -44,13 +44,13 @@ def stage_checkpoint(df, eager: bool = True):
 
 def get_spark(app: str = "kgre", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """Session with the pipeline's defaults.  ``shuffle_partitions``
+    defaults to the session's ``defaultParallelism`` (one per core
+    locally; AQE coalesces below it)."""
     master = master or os.environ.get("KGRE_MASTER", "local[*]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("KGRE_SHUFFLE_PARTITIONS", "32"))
-    return (
+    spark = (
         SparkSession.builder.appName(app)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -70,3 +70,7 @@ def get_spark(app: str = "kgre", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark

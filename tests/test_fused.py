@@ -74,22 +74,109 @@ def test_fused_respects_stop_and_allowlists(spark):
             == sorted(tuple(r) for r in fused.collect()))
 
 
+def _html(text):
+    return synthgen.HTML_TEMPLATE.format(title="t", text=text,
+                                         footer=0).encode("utf-8")
+
+
+# qualifying sentences after non-qualifying ones, and a VGENE token (NER
+# HUMAN_GENE|VIRUS_GENE) that qualifies only through its second key
+_SCREENED_TEXTS = [
+    "the cell binds . GENE12 regulates growth . GENE12 binds GO345 in "
+    "the cell . GO7 is a site .",
+    "GO9 and GO10 . VGENE4 binds GENE5 . VGENE4 regulates GO11 via "
+    "GENE5 .",
+    "data model . VGENE8 VGENE8 alters GO3 . growth factor . GENE2 and "
+    "GO3 and GENE6 .",
+]
+
+
+def _screened_pages(spark):
+    """40 generated pages plus the hand-written ``_SCREENED_TEXTS``."""
+    rows = [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
+            for p in synthgen.gen_pages_rows(40)]
+    ts = rows[0][1]
+    rows += [("https://screen.example/p%d" % i, ts, _html(t), t, "en")
+             for i, t in enumerate(_SCREENED_TEXTS)]
+    return spark.createDataFrame(rows, schema=synthgen.PAGES_SCHEMA)
+
+
 def test_pages_mentions_equal_two_stage(spark):
-    """The fused pages -> mentions stage equals parse_sentences chained
-    into sentences_to_mentions, as multisets."""
+    """The fused pages -> mentions stage, which drops sentences without
+    both entity types before parsing them, equals parse_sentences
+    (every sentence parsed) chained into sentences_to_mentions, as
+    multisets."""
     from kgre.parse import parse_sentences
     from kgre.pipeline import pages_to_mentions, sentences_to_mentions
 
+    pages = _screened_pages(spark)
+    sents = parse_sentences(pages).cache()
+    for ea in ("HUMAN_GENE", "VIRUS_GENE"):
+        fused = pages_to_mentions(pages, ea, "ONTOLOGY")
+        two = sentences_to_mentions(sents, ea, "ONTOLOGY")
+        a = sorted(tuple(r) for r in fused.collect())
+        assert a == sorted(tuple(r) for r in two.collect())
+        assert {r[1] for r in a} == {"e1", "e2"}
+    sents.unpersist()
+
+
+def test_pages_candidates_equal_two_stage(spark):
+    """The fused pages -> candidates stage equals the unfiltered chain
+    candidates_from_sentences(parse_sentences(pages)), as multisets."""
+    from kgre.candidates import candidates_from_sentences
+    from kgre.parse import parse_sentences
+
+    pages = _screened_pages(spark)
+    sents = parse_sentences(pages).cache()
+    stop = synthgen.stop_entity_ids()
+    for ea, hand in (("GENE", (0, 1, 2)), ("VIRUS_GENE", (1, 2))):
+        fused = pages_to_candidates(pages, ea, "ONTOLOGY", stop)
+        two = candidates_from_sentences(sents, ea, "ONTOLOGY", stop)
+        assert fused.columns == two.columns
+        a = sorted(tuple(r) for r in fused.collect())
+        assert a == sorted(tuple(r) for r in two.collect())
+        urls = {r[0] for r in a}
+        assert {"https://screen.example/p%d" % i for i in hand} <= urls
+    sents.unpersist()
+
+
+def test_page_source_parses_only_sentences_with_both_types(spark,
+                                                           monkeypatch):
+    """The html page source of pages_to_candidates tags words first and
+    tokenizes / builds edges only for a sentence holding both entity
+    types; sent_id still counts the dropped sentences."""
+    from kgre import nlp, pipeline
+
+    stage = {}
+
+    def capture(df, in_cols, source, emit, schema, cols=None):
+        stage.update(source=source, emit=emit)
+        return df
+
+    monkeypatch.setattr(pipeline, "sentence_stage", capture)
     pages = spark.createDataFrame(
-        [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
-         for p in synthgen.gen_pages_rows(40)],
-        schema=synthgen.PAGES_SCHEMA)
-    fused = pages_to_mentions(pages, "HUMAN_GENE", "ONTOLOGY")
-    two = sentences_to_mentions(parse_sentences(pages), "HUMAN_GENE",
-                                "ONTOLOGY")
-    a = sorted(tuple(r) for r in fused.collect())
-    assert a == sorted(tuple(r) for r in two.collect())
-    assert {r[1] for r in a} == {"e1", "e2"}
+        [("u", b"", "en")], "url string, html binary, lang string")
+    pipeline.pages_to_candidates(pages, "GENE", "ONTOLOGY", [])
+
+    calls = {"tokenize": 0, "build_deps": 0}
+
+    def counted(name):
+        fn = getattr(nlp, name)
+
+        def wrapper(*args):
+            calls[name] += 1
+            return fn(*args)
+        return wrapper
+
+    for name in calls:
+        monkeypatch.setattr(nlp, name, counted(name))
+    html = _html("the cell binds . GENE12 regulates growth . "
+                 "GENE12 binds GO345 in the cell .")
+    sents = list(stage["source"]("u", html))
+    rows = [r for s in sents for r in stage["emit"](s)]
+    assert calls == {"tokenize": 1, "build_deps": 1}
+    assert [s["sent_id"] for s in sents] == [2]
+    assert rows and {r["sent_id"] for r in rows} == {2}
 
 
 def test_empty_python_batches_yield_no_rows(spark, tmp_path):
